@@ -33,8 +33,7 @@ class DedupConfig:
     num_perms: int = 128            # signature length (reference: 128-d encodings)
     minhash_seed: int = 42          # seeds the (a_i, b_i) multiply-shift params
 
-    # --- SimHash (F2) ---
-    simhash_bits: int = 64
+    # --- SimHash (F2, always 64-bit) ---
     simhash_hamming_threshold: int = 3   # bit_count(a ^ b) <= h ⇒ near-dup
 
     # --- LSH banding (J1) ---
@@ -80,17 +79,10 @@ class DedupConfig:
     # "what's wrong" #2c).
     store_shingles: bool = True
 
-    # --- candidate-generation census input (VERDICT r4 #2) ---
-    # candidate_pairs scans its bucket stream 3× (size census, normal
-    # anti-join, mega semi-join).  True: localCheckpoint the exploded
-    # stream once so the scans re-read stored blocks instead of
-    # recomputing the posexplode (+ the incremental path's state-read
-    # and touched-bucket semi-join) per scan.  A/B at 2M docs,
-    # bounded, local[8], interleaved order (BENCH/ab_runs.jsonl
-    # `checkpoint_buckets_ab`): recompute WINS — best wall 304 s vs
-    # 412 s, candidate stage 94 s vs 159 s — so False is the default;
-    # 3 recomputed scans beat 1 write + 3 reads of the n_docs×32-row
-    # stream (same conclusion as the suffix path's anchor A/B).
+    # --- retired switch, kept so existing callers still construct ---
+    # localCheckpointing the exploded bucket stream lost its A/B
+    # (BENCH/ab_runs.jsonl `checkpoint_buckets_ab`: 412 s vs 304 s
+    # recomputed); only False is accepted.
     checkpoint_buckets: bool = False
 
     # --- incremental state maintenance (B2; VERDICT r2 #2a/#2b) ---
@@ -126,8 +118,14 @@ class DedupConfig:
     span_pos_cap: int = 256
 
     # --- execution ---
-    shuffle_partitions: int = 32
     signature_batch_docs: int = 2048  # numpy chunking inside the pandas UDF
+
+    def __post_init__(self) -> None:
+        if self.checkpoint_buckets:
+            raise ValueError(
+                "checkpoint_buckets=True is retired: recomputing the "
+                "bucket stream won its A/B; only False is accepted"
+            )
 
     @property
     def rows_per_band(self) -> int:

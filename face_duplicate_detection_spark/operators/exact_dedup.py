@@ -61,12 +61,11 @@ def exact_dup_edges(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
 
 def exact_base(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """One window pass serving BOTH pipeline consumers (round 6).
+    """One window pass serving BOTH pipeline consumers (round 6): the
+    exact-dup edge set and the rows that proceed to signatures share
+    one ``(text_hash, text)`` window, so the text column is shuffled
+    once per run.
 
-    The pipeline used to run two separate windows over the identical
-    ``(text_hash, text)`` key — :func:`exact_dup_edges` for the edge
-    set and :func:`exact_representatives` for the rows that proceed to
-    signatures — i.e. the full text column was shuffled twice per run.
     This emits (doc_id, text, rep = min doc_id of the identical-text
     group, _rn = rank within the group) from a single exchange+sort:
     with the window ordered by doc_id ascending, the running ``min``
@@ -85,19 +84,3 @@ def exact_base(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
         F.row_number().over(w).alias("_rn"),
     )
 
-
-def exact_representatives(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """One row per distinct text: the min-doc_id representative.
-
-    Single window pass (one shuffle of the text column) instead of
-    groupBy + semi-join (which would shuffle the text twice).
-    """
-    from pyspark.sql.window import Window
-
-    hashed = with_text_hash(docs)
-    w = Window.partitionBy("text_hash", "text").orderBy(id_col)
-    return (
-        hashed.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "text_hash")
-    )

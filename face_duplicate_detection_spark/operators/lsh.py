@@ -99,16 +99,15 @@ def candidate_pairs(buckets: DataFrame, cfg: DedupConfig) -> DataFrame:
     37.6s vs ~13s for this design on the 200k-doc scaling corpus.
     The census's 3 scans of the input are cheap because the bucket
     stream is either a posexplode of cached signatures or a
-    rebalanced Arrow pass.  Round 5 A/B'd the remaining alternative —
-    localCheckpoint the exploded stream once so the 3 scans re-read
-    stored blocks (``DedupConfig.checkpoint_buckets``) — at 2M docs,
-    bounded, local[8], interleaved run order (BENCH/ab_runs.jsonl
-    ``checkpoint_buckets_ab``): recompute wins, best wall 304 vs
-    412 s and candidate stage 94 vs 159 s — writing the ~n_docs×32-row
-    stream costs more than two extra posexplode map passes that
-    pipeline into their shuffles.  Three scans of a recomputed stream
-    IS the optimal plan here; the flag stays available for storage-
-    backed inputs where the recompute is not a cached posexplode.)
+    rebalanced Arrow pass.  Round 5 A/B'd localCheckpointing the
+    exploded stream once so the 3 scans re-read stored blocks — at 2M
+    docs, bounded, local[8], interleaved run order
+    (BENCH/ab_runs.jsonl): recompute wins, best wall 304 vs 412 s and
+    candidate stage 94 vs 159 s — writing the ~n_docs×32-row stream
+    costs more than two extra posexplode map passes that pipeline
+    into their shuffles.  The incremental path, whose bucket stream
+    is a state scan rather than a cached posexplode, checkpoints it
+    itself.)
 
     **Mega buckets** (north_rule salted-key skew mitigation): a
     pathological boilerplate bucket at 10^12-doc scale could make one

@@ -91,9 +91,7 @@ def compute_shingle_sets(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
     return docs.select("doc_id", "text").mapInPandas(gen, schema=SHINGLE_SCHEMA)
 
 
-def compute_signatures(
-    docs: DataFrame, cfg: DedupConfig, parallelism: int | None = None
-) -> DataFrame:
+def compute_signatures(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
     """docs(doc_id, text, ...) → signatures table.
 
     Input should already be status-filtered (normalize.matchable_docs);
@@ -142,8 +140,7 @@ def compute_signatures(
                 )
 
     inp = docs.select("doc_id", "text")
-    if parallelism is None:
-        parallelism = inp.sparkSession.sparkContext.defaultParallelism
+    parallelism = inp.sparkSession.sparkContext.defaultParallelism
     if inp.rdd.getNumPartitions() < parallelism:
         inp = inp.repartition(parallelism)
     out = inp.mapInPandas(sign, schema=SIGNATURE_SCHEMA)

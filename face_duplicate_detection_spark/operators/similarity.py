@@ -20,8 +20,6 @@ Dot products use native higher-order functions (``zip_with`` +
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -108,7 +106,7 @@ IVF_MAX_CENTROIDS = 16384   # collect stays ≤ ~16 MB at dim=128 float64
 # callers fall back to the shuffle-partitioned IVF cell plan — the cap
 # is a constant, so the decision is scale-adaptive, not tuned to a
 # test corpus.
-ANN_BRUTE_MAX = int(os.environ.get("FDDS_ANN_BRUTE_MAX", "131072"))
+ANN_BRUTE_MAX = 131_072
 
 
 def _cosine_topk_exact_blas(

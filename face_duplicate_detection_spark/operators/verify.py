@@ -28,7 +28,9 @@ def verify_pairs(
     cfg: DedupConfig,
     docs: DataFrame | None = None,
 ) -> DataFrame:
-    """pairs(a, b) ⋈ signatures → dup_pairs(a, b, jaccard, hamming, method).
+    """pairs(a, b, n_bands, forced) ⋈ signatures → dup_pairs(a, b,
+    jaccard, hamming, method).  `pairs` is :func:`lsh.candidate_pairs`
+    output (or a filtered subset with the same columns).
 
     Only rows with jaccard ≥ cfg.jaccard_threshold survive.  The two
     signature joins shuffle just the candidate doc_ids' shingle arrays
@@ -40,16 +42,15 @@ def verify_pairs(
     shingle sets are recomputed for the candidate docs only — one
     semi-join-pruned Arrow pass over ~candidates, not corpus.
     """
-    if "n_bands" in pairs.columns and cfg.min_band_collisions > 1:
+    if cfg.min_band_collisions > 1:
         # free pre-filter: n_bands is a MinHash similarity estimate the
         # LSH stage already computed; see DedupConfig.min_band_collisions.
         # `forced` pairs (mega-bucket chain/bridge — proposed by one
         # band by construction, ADVICE r1) bypass the filter and are
         # decided by exact Jaccard alone.
-        keep = F.col("n_bands") >= cfg.min_band_collisions
-        if "forced" in pairs.columns:
-            keep = keep | F.col("forced")
-        pairs = pairs.filter(keep)
+        pairs = pairs.filter(
+            (F.col("n_bands") >= cfg.min_band_collisions) | F.col("forced")
+        )
     # shuffle-prune: only candidate docs' (fat) shingle arrays enter
     # the pair joins.  No broadcast hint — AQE converts the semi-join
     # to broadcast at runtime when the id set is small (always, at

@@ -98,7 +98,9 @@ def run_pipeline(
     """Run (or resume) the full dedup pipeline.
 
     With a catalog, every stage table is committed and a committed
-    stage is *read back, not recomputed* on the next call.
+    stage is *read back, not recomputed* on the next call.  A stage
+    committed under a different config raises ``ValueError`` instead
+    of silently serving results for the old thresholds.
     """
     spark = spark or docs.sparkSession
 
@@ -110,6 +112,7 @@ def run_pipeline(
     # not-yet-cached signature partitions) — measured ~3× slower than
     # stage-sequential execution on this workload.
     _HOT = {"signatures", "dup_pairs", "exact_base", "candidate_pairs"}
+    config = repr(cfg)
 
     def stage(name: str, build):
         import time as _time
@@ -126,15 +129,22 @@ def run_pipeline(
                 # at 800k docs: e2e wall 155.9 → ~107 s at local[8]
                 # (the per-stage sum), and the 2→8-core scaling
                 # efficiency of the whole pipeline rises to the
-                # stage-level ~0.8 (tools/stage_scaling.py).
+                # stage-level ~0.8.
                 df = local_ckpt(df)
             if timings is not None:
                 timings[name] = round(_time.time() - t0, 2)
             return df
         if catalog.is_committed(name):
+            committed = catalog.read_manifest(name).get("config")
+            if committed != config:
+                raise ValueError(
+                    f"stage {name!r} in {catalog.root} was committed under "
+                    f"{committed} but this run uses {config}; invalidate "
+                    "the catalog's stages or resume with the same config"
+                )
             return catalog.read(spark, name)
         df = build()
-        catalog.write(name, df, {"config": repr(cfg)})
+        catalog.write(name, df, {"config": config})
         if timings is not None:
             timings[name] = round(_time.time() - t0, 2)
         return catalog.read(spark, name)
@@ -152,12 +162,10 @@ def run_pipeline(
 
     # exact-copy collapse (only distinct texts get signatures).  One
     # checkpointed window pass feeds BOTH the edge set and the
-    # representative rows (round 6): the former exact_edges stage plus
-    # the lazily recomputed exact_representatives each shuffled the
-    # full text column through an identical (text_hash, text) window —
-    # two exchanges of the fat column where one suffices, and the
-    # signature stage now reads representatives from stored blocks
-    # instead of re-running normalize + window from the source.
+    # representative rows, so the fat text column crosses one
+    # exchange, and the signature stage reads representatives from
+    # stored blocks instead of re-running normalize + window from the
+    # source.
     base = stage("exact_base", lambda: exact_base(matchable))
     exact_edges = base.filter(F.col("doc_id") != F.col("rep")).select(
         F.col("rep").alias("a"), F.col("doc_id").alias("b")
@@ -166,16 +174,10 @@ def run_pipeline(
 
     signatures = stage("signatures", lambda: compute_signatures(reps, cfg))
 
-    def build_pairs():
-        buckets = explode_buckets(signatures)
-        if cfg.checkpoint_buckets:
-            # one stored copy of the exploded stream; the census's 3
-            # scans become block re-reads instead of posexplode
-            # recomputes (config.checkpoint_buckets for the A/B)
-            buckets = local_ckpt(buckets)
-        return candidate_pairs(buckets, cfg)
-
-    cand = stage("candidate_pairs", build_pairs)
+    cand = stage(
+        "candidate_pairs",
+        lambda: candidate_pairs(explode_buckets(signatures), cfg),
+    )
 
     def build_dup_pairs():
         # bounded-state mode recomputes candidate shingles from the

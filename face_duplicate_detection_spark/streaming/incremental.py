@@ -425,22 +425,18 @@ def incremental_batch(
             "band_hash",
             "left_semi",
         )
-        bucket_input = touched.unionByName(new_buckets)
+        # unlike run_pipeline's case (a cheap posexplode of
+        # checkpointed signatures, where the A/B showed recompute
+        # wins — BENCH/ab_runs.jsonl), this bucket stream is a full
+        # state-parquet scan plus an anti-join and a touched-bucket
+        # semi-join; recomputing THAT 3× for the census made per-batch
+        # wall grow with the accumulated corpus (round-5 incremental
+        # campaign: batch walls 45 → 154 s across 8 × 250k batches) —
+        # the one stored copy is O(touched ∪ new), not O(corpus)
+        bucket_input = local_ckpt(touched.unionByName(new_buckets))
     else:
         bucket_input = new_buckets
         all_sigs = new_sigs
-
-    if has_state or cfg.checkpoint_buckets:
-        # unlike run_pipeline's case (a cheap posexplode of
-        # checkpointed signatures, where the A/B showed recompute
-        # wins — BENCH/ab_runs.jsonl checkpoint_buckets_ab), the
-        # incremental bucket stream is a full state-parquet scan plus
-        # an anti-join and a touched-bucket semi-join; recomputing
-        # THAT 3× for the census made per-batch wall grow with the
-        # accumulated corpus (round-5 incremental campaign: batch
-        # walls 45 → 154 s across 8 × 250k batches) — the one stored
-        # copy is O(touched ∪ new), not O(corpus)
-        bucket_input = local_ckpt(bucket_input)
     _mark("buckets")
     cand = candidate_pairs(bucket_input, cfg)
     cand_new = (

@@ -50,12 +50,16 @@ def test_hash_collision_does_not_merge(docs, monkeypatch):
 
 
 def test_representatives_survive_collision(docs, monkeypatch):
+    """The pipeline's representatives are exact_base's ``_rn == 1``
+    rows; a forced hash collision must still keep one per text."""
     monkeypatch.setattr(
         exact_dedup,
         "with_text_hash",
         lambda df, text_col="text": df.withColumn("text_hash", F.lit(0)),
     )
-    reps = {
-        r["doc_id"] for r in exact_dedup.exact_representatives(docs).collect()
-    }
+    base = exact_dedup.exact_base(docs)
+    reps = {r["doc_id"] for r in base.filter(F.col("_rn") == 1).collect()}
     assert reps == {1, 3, 5}
+    assert {(r["doc_id"], r["rep"]) for r in base.collect()} == {
+        (1, 1), (2, 1), (3, 3), (4, 3), (5, 5)
+    }

@@ -4,7 +4,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from face_duplicate_detection_spark.catalog import StageCatalog
-from face_duplicate_detection_spark.metrics import lineage_rows, observe_stage
+from face_duplicate_detection_spark.metrics import lineage_rows
 from face_duplicate_detection_spark.plans.outputs import (
     consolidated_report,
     duplicate_report,
@@ -51,12 +51,6 @@ def test_summary_metrics_consistent(piperes, pages_500):
     )
     assert row["duplicate_docs"] > 0
     assert row["n_clusters"] < row["total_docs"]
-
-
-def test_observe_stage_counts(spark, documents):
-    df, obs = observe_stage(documents, "scan")
-    n = df.count()
-    assert obs.get["rows"] == n
 
 
 def test_lineage_rows_sum_to_input(spark, documents):

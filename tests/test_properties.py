@@ -1,12 +1,14 @@
-"""Property-based kernel tests (hypothesis) — SURVEY.md §5.3.
+"""Property-based tests (hypothesis) — SURVEY.md §5.3.
 
-Pure-numpy properties, no Spark session needed: these pin the
-invariants the distributed stages rely on (determinism, batch-order
-independence, estimator correctness).
+Mostly pure-numpy kernel properties: these pin the invariants the
+distributed stages rely on (determinism, batch-order independence,
+estimator correctness).  The last property checks both branches of
+the connected-components size cap against each other on a Spark
+session.
 """
 
 import numpy as np
-from hypothesis import given, settings
+from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from face_duplicate_detection_spark.functions.text_hashing import (
@@ -16,6 +18,9 @@ from face_duplicate_detection_spark.functions.text_hashing import (
     normalize_text,
     shingle_hashes,
     simhash_batch,
+)
+from face_duplicate_detection_spark.operators.connected_components import (
+    connected_components,
 )
 
 texts = st.text(
@@ -104,3 +109,30 @@ def test_minhash_estimator_unbiased_on_known_overlap(seed):
     est = float((sig[0] == sig[1]).mean())
     sigma = (j * (1 - j) / 128) ** 0.5
     assert abs(est - j) <= 4 * sigma + 1e-9
+
+
+# small id range so random edges form several multi-node components;
+# self-loops and repeated edges are drawn as often as any other pair.
+# Each example costs a few seconds of Spark jobs, hence few examples.
+edge_lists = st.lists(
+    st.tuples(st.integers(0, 40), st.integers(0, 40)), min_size=1, max_size=60
+)
+
+
+@given(edge_lists)
+@settings(
+    max_examples=3,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+def test_cc_driver_path_matches_distributed(spark, edges):
+    """Both branches of the CC size cap label any graph identically:
+    the driver union-find (default cap) and the distributed
+    large/small-star loop (``driver_cap=0``)."""
+    df = spark.createDataFrame(edges, "a long, b long")
+    driver = {r["doc_id"]: r["cluster_id"]
+              for r in connected_components(df).collect()}
+    star = {r["doc_id"]: r["cluster_id"]
+            for r in connected_components(df, driver_cap=0).collect()}
+    assert driver == star
+    assert set(driver) == {n for e in edges for n in e}

@@ -55,3 +55,16 @@ def test_committed_stage_not_recomputed(spark, cfg, tmp_path_factory):
     different = synthesize_pages(spark, 50, seed=99)
     res2 = run_pipeline(different, cfg, input_kind="pages", catalog=cat)
     assert res2.signatures.count() == n_sigs  # served from checkpoint
+
+
+def test_resume_under_changed_config_refused(spark, cfg, tmp_path_factory):
+    """Committed stages record the config they were built under; a
+    resume with a different config (e.g. a new Jaccard threshold) must
+    fail loudly instead of serving the old run's dup_pairs/clusters."""
+    cat = StageCatalog(str(tmp_path_factory.mktemp("ckpt3")))
+    pages = synthesize_pages(spark, 100, seed=42)
+    run_pipeline(pages, cfg, input_kind="pages", catalog=cat)
+
+    changed = cfg.with_(jaccard_threshold=0.9)
+    with pytest.raises(ValueError, match="committed under"):
+        run_pipeline(pages, changed, input_kind="pages", catalog=cat)

@@ -31,9 +31,7 @@ def main():
         matchable_docs,
         normalize_documents,
     )
-    from face_duplicate_detection_spark.operators.exact_dedup import (
-        exact_representatives,
-    )
+    from face_duplicate_detection_spark.operators.exact_dedup import exact_base
     from face_duplicate_detection_spark.operators.lsh import (
         candidate_pairs,
         explode_buckets,
@@ -76,7 +74,8 @@ def main():
     )
 
     m = matchable_docs(norm)
-    sigs = compute_signatures(exact_representatives(m), cfg)
+    reps = exact_base(m).filter(F.col("_rn") == 1).select("doc_id", "text")
+    sigs = compute_signatures(reps, cfg)
     sections.append(
         (
             "signatures (the one Python crossing)",

@@ -152,6 +152,7 @@ def main() -> None:
         "n_batches": N_BATCHES,
         "cores": CORES,
         "mem": mem,
+        "store_shingles": store,
         "bounded": not store,
         **payload,
         "ratio_vs_oneshot": round(payload["inc_total"] / payload["oneshot"], 2),
