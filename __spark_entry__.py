@@ -880,8 +880,8 @@ def _dedup_cte() -> str:
 
 def _closure_cte() -> str:
     """Transitive closure over `edges(a, b)` → labels(doc_id,
-    cluster_id = min reachable id): the SQL twin of the large/small-
-    star connected components."""
+    cluster_id = min reachable id): the SQL twin of the engine's
+    union-find connected components."""
     return """
         sym AS (
           SELECT a AS src, b AS dst FROM edges

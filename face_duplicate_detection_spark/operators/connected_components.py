@@ -1,4 +1,4 @@
-"""Iterative DataFrame connected components (large-star / small-star).
+"""Connected components by partition-local union-find contraction.
 
 Replaces the reference's greedy leader clustering — first matching
 representative wins, ``break`` at
@@ -10,36 +10,41 @@ would emit passed the same similarity predicate and is therefore in
 our edge set, so dup-pair recall vs the reference is bounded only by
 the LSH S-curve, not by clustering.
 
-Algorithm: alternating **large-star / small-star** (Kiveris et al.,
-"Connected Components in MapReduce and Beyond" — public algorithm),
-operating directly on the edge set:
+Algorithm: union-find (min-root invariant, so a node's root IS its
+label), on the driver for small edge sets and otherwise contracted
+inside partitions, after "BTS: Load-Balanced Distributed Union-Find"
+(ICDE 2024, PAPERS.md):
 
-- ``large-star``: every node attaches its *larger* neighbors to the
-  minimum of its neighborhood (incl. itself).
-- ``small-star``: every node attaches its smaller-or-equal neighbors
-  (and itself) to that minimum.
+- ≤ :data:`CC_DRIVER_CAP` distinct edges: one collect, one exact
+  union-find on the driver.
+- above it, contraction rounds on the executors.  Each round keys
+  every oriented edge (hi > lo) under BOTH endpoints, hash-partitions
+  into ``n_edges // CC_EDGES_PER_TASK + 1`` tasks, and runs the same
+  union-find inside each task (:func:`_contract_partition`).  A task
+  emits one ``(node, local_min)`` star per non-root node it saw; the
+  stars connect exactly what the task's edges connected, so the
+  round's output has the input's components.  The loop stops when
+  - the round ran in ONE task: that union-find saw every edge, so its
+    stars are the exact labels; or
+  - no task changed its input.  All of a node's edges share its task,
+    so every node then has either one edge, to a smaller root, or
+    only edges to larger leaves: a star forest rooted at component
+    minima.
+  The per-task ``changed`` flag and the round's edge count are
+  observed on the round's own checkpoint job — no extra action.
+  Running out of ``max_iterations`` raises instead of returning wrong
+  labels.
 
-Alternating the two converges to star graphs (every member directly
-linked to its component minimum) in O(log² n) rounds — crucially
-*independent of component diameter*.  Plain min-label propagation
-moves one hop per round; the LSH chain-pairing of oversized buckets
-builds path-like graphs whose diameter easily exceeds any fixed cap,
-and ADVICE r1 demonstrated a 121-node path silently fragmenting into
-70 clusters under a 50-round one-hop loop.  (A min-label loop with
-per-iteration pointer jumping was tried first; the label-table
-self-join it needs triggers a geometric per-iteration slowdown in
-Spark 4.1 even with truncated lineage, so the edge-rewriting
-formulation — groupBy + join only, no self-join of the iterated
-table — is both the published algorithm and the one that measures
-flat per-round cost.)
+Union-find is diameter-independent: the LSH chain-pairing of oversized
+buckets builds path-like graphs, on which one-hop min-label
+propagation fragmented a 121-node path into 70 clusters under a
+50-round cap (ADVICE r1).  Inside a task a whole path collapses at
+once; across tasks, each round joins every node's neighbourhood.
 
-Every round is groupBy(node) → min + equi-join → distinct over the
-current edge set; lineage is truncated per round with
-``localCheckpoint`` (SURVEY.md §4.4 — Catalyst cannot do this for
-us).  Convergence is detected by a (count, hash-sum) multiset
-fingerprint observed on the same job that materializes the round —
-no extra action.  Non-convergence raises instead of returning wrong
-labels.
+Degree bound: keying by endpoint puts all of a node's edges in one
+task, so a hub of degree d feeds ≥ d edges to a single union-find
+whatever the task count.  The large/small-star rounds this replaced
+concentrated a hub the same way (their ``groupBy(u)``).
 
 Canonical member = min(doc_id) in the component (SURVEY.md §2.6 W1 —
 deterministic stand-in for the reference's first-seen-in-insertion-
@@ -54,19 +59,24 @@ from pyspark.sql import functions as F
 from face_duplicate_detection_spark.session import local_ckpt
 
 # Driver fast-path bound (round 6): edge sets at or below this size are
-# union-found on the driver instead of iterating distributed star
-# rounds.  Rationale (optimization guide §1.2 — fix the algorithm
-# before the configuration): dup GRAPHS are tiny relative to the
-# corpus (the 5000-doc sf0.1 bench corpus yields 249 edges; even the
-# 8M-doc campaign yields ~10^6), and each star round is 4-5 tiny
-# shuffles plus a localCheckpoint job — pure scheduler overhead below
-# ~10^5 edges (measured: the CC stage was 1.4-2.0 s of the 6 s sf0.1
-# pipeline).  200k edges × 16 B = ~3 MB collected — same order as the
-# bounded centroid collect in similarity.py; beyond the cap the
-# distributed large/small-star loop runs unchanged, so the plan stays
-# scale-safe (the cap is a constant, not a function of corpus size).
-# Read at call time, so a caller may rebind the module attribute.
+# union-found on the driver in one collect.  Dup GRAPHS are tiny
+# relative to the corpus (the 5000-doc sf0.1 bench corpus yields 249
+# edges; even the 8M-doc campaign yields ~10^6), and every contraction
+# round is a shuffle plus a localCheckpoint job — scheduler overhead a
+# single collect does not pay.  200k edges × 16 B = ~3 MB collected —
+# same order as the bounded centroid collect in similarity.py; beyond
+# the cap the rounds run on executors, so the plan stays scale-safe
+# (the cap is a constant, not a function of corpus size).
 CC_DRIVER_CAP = 200_000
+
+# Edges per task of a contraction round: a round over n edges runs in
+# n // CC_EDGES_PER_TASK + 1 tasks, so one task holds ~2 × this many
+# (hi, lo) pairs in its union-find, plus any hub's whole degree.
+CC_EDGES_PER_TASK = 50_000
+
+# Both constants are read at call time, so a caller may rebind them.
+
+_STAR_SCHEMA = "hi long, lo long, changed boolean"
 
 
 def _union_find_labels(pairs) -> dict[int, int]:
@@ -91,38 +101,26 @@ def _union_find_labels(pairs) -> dict[int, int]:
     return {x: find(x) for x in parent}
 
 
-def _star_round(e: DataFrame) -> DataFrame:
-    """One large-star + small-star round over oriented edges (hi > lo).
+def _contract_partition(batches):
+    """``mapInPandas`` body of one contraction round: union-find over
+    the (hi, lo) edges this task received, emitted as (node, local_min)
+    stars, each row flagged with whether the stars differ from the
+    task's input edge set.  Module-level, so Spark ships it by
+    reference and the task runs this module's own union-find."""
+    import pandas as pd
 
-    Returns the new oriented edge set (not yet deduped/checkpointed).
-    """
-    # ---- large-star: neighbors both ways, larger neighbors → min ----
-    sym = e.select(F.col("hi").alias("u"), F.col("lo").alias("v")).unionByName(
-        e.select(F.col("lo").alias("u"), F.col("hi").alias("v"))
-    )
-    mins = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
-    # no distinct here: duplicate (hi, lo) rows don't change small-star
-    # minima and the final distinct dedups — saves a full shuffle/round
-    large = (
-        sym.join(mins, "u")
-        .filter(F.col("v") > F.col("u"))
-        .select(F.col("v").alias("hi"), F.col("m").alias("lo"))
-        .filter(F.col("hi") != F.col("lo"))
-    )
-
-    # ---- small-star on the large-star output (hi > lo oriented) ----
-    smins = large.groupBy("hi").agg(F.min("lo").alias("m"))
-    joined = large.join(smins, "hi")
-    lo_edges = (
-        joined.filter(F.col("lo") != F.col("m"))
-        .select(F.col("lo").alias("hi"), F.col("m").alias("lo"))
-    )
-    hi_edges = joined.select("hi", F.col("m").alias("lo"))
-    return (
-        lo_edges.unionByName(hi_edges)
-        .filter(F.col("hi") != F.col("lo"))
-        .distinct()
-    )
+    edges: set[tuple[int, int]] = set()
+    for b in batches:
+        edges.update(zip(b["hi"].tolist(), b["lo"].tolist()))
+    if not edges:
+        return
+    star = {(n, r) for n, r in _union_find_labels(edges).items() if n != r}
+    hi, lo = zip(*star)
+    yield pd.DataFrame({
+        "hi": pd.array(hi, dtype="int64"),
+        "lo": pd.array(lo, dtype="int64"),
+        "changed": star != edges,
+    })
 
 
 def connected_components(
@@ -138,7 +136,7 @@ def connected_components(
 
     ``driver_cap`` (default :data:`CC_DRIVER_CAP`) selects the bounded
     driver union-find fast path for small deduped edge sets; pass 0 to
-    force the distributed star loop regardless of size.
+    force the contraction rounds regardless of size.
     """
     from pyspark.sql import Observation
 
@@ -159,25 +157,24 @@ def connected_components(
         .distinct()
     )
     # checkpoint the distinct output directly: distinct's own exchange
-    # already partitioned by (hi, lo), and the star rounds re-shuffle
-    # by a different key anyway — the former repartition("hi") was one
-    # extra full exchange per CC invocation for nothing (round 6)
-    e = local_ckpt(e)
-    spark = e.sparkSession
-    n_edges = e.count()
+    # already partitioned by (hi, lo), and the rounds re-shuffle by
+    # endpoint anyway.  The edge count rides on the same job.
+    size = Observation()
+    e = local_ckpt(e.observe(size, F.count(F.lit(1)).alias("n")))
+    n_edges = size.get["n"]
     cap = CC_DRIVER_CAP if driver_cap is None else driver_cap
     if n_edges <= cap:
         # bounded driver fast path (see CC_DRIVER_CAP): one collect of
         # ≤ cap (hi, lo) longs, exact union-find, and the star table
         # goes back as a broadcast left join — the same final join
-        # shape as the distributed loop, so self-loop-only nodes
+        # shape as the contraction rounds, so self-loop-only nodes
         # (present in `nodes`, absent from `e`) still label themselves
         # identically.
         import pandas as pd
 
         lab = _union_find_labels((r["hi"], r["lo"]) for r in e.collect())
         star = [(n, r) for n, r in lab.items() if n != r]
-        star_df = spark.createDataFrame(
+        star_df = e.sparkSession.createDataFrame(
             pd.DataFrame(
                 {
                     "node": pd.array([n for n, _ in star], dtype="int64"),
@@ -190,66 +187,37 @@ def connected_components(
             F.col("node").alias("doc_id"),
             F.coalesce("root", "node").alias("cluster_id"),
         )
-    # size the per-round edge set to the actual edge count — dup graphs
-    # are usually tiny relative to the corpus, and 32-task jobs over a
-    # few thousand edges are pure scheduler overhead.  The sizing is an
-    # explicit repartition(parts, hi) on each round's OUTPUT (plus AQE
-    # coalescing the intra-round groupBy/join shuffles) — NOT a mutation
-    # of the session-global spark.sql.shuffle.partitions, which would
-    # silently resize any concurrent query on a shared session for the
-    # duration of the loop (ADVICE r3 / VERDICT r3 "what's wrong" #2;
-    # an A/B measured the explicit form faster on small graphs — the
-    # common case — and within 8% on a pathological 200k-edge chain).
-    # Round inputs are narrowed with coalesce (no shuffle, no second
-    # checkpoint job — round 6; the rounds repartition their OUTPUTS
-    # to `parts` anyway).
-    parts = max(1, min(
-        spark.sparkContext.defaultParallelism,
-        n_edges // 50_000 + 1,
-    ))
-    if parts < e.rdd.getNumPartitions():
-        e = e.coalesce(parts)
-
-    prev_sig: tuple | None = None
-    converged = False
+    tasks = n_edges // CC_EDGES_PER_TASK + 1
     for _ in range(max_iterations):
-        obs = Observation()
-        e = local_ckpt(
-            _star_round(e)
-            .repartition(parts, "hi")
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                # xor-fold of per-edge hashes: order-insensitive SET
-                # fingerprint (edges are distinct), no ANSI overflow
-                F.bit_xor(F.xxhash64("hi", "lo")).alias("hsum"),
-            )
+        # both endpoints key every edge, so each node's task sees all
+        # of its edges (the no-change stop relies on this)
+        keyed = e.select(F.col("hi").alias("k"), "hi", "lo").unionByName(
+            e.select(F.col("lo").alias("k"), "hi", "lo")
         )
-        got = obs.get
-        sig = (got["n"], got["hsum"])
-        if sig == prev_sig:
-            converged = True
+        changed, size = Observation(), Observation()
+        stars = (
+            keyed.repartition(tasks, "k")
+            .select("hi", "lo")
+            .mapInPandas(_contract_partition, _STAR_SCHEMA)
+            .observe(changed, F.max("changed").alias("changed"))
+            .select("hi", "lo")
+        )
+        if tasks > 1:
+            # a star may come from both of its endpoint tasks; dropping
+            # the copy sizes the next round by distinct edges
+            stars = stars.distinct()
+        e = local_ckpt(stars.observe(size, F.count(F.lit(1)).alias("n")))
+        if tasks == 1 or not changed.get["changed"]:
             break
-        prev_sig = sig
-        # resize the NEXT round to the observed edge count: star rounds
-        # shrink the edge set geometrically, and keeping the round-1
-        # partition count schedules ever-emptier tasks — a fixed
-        # per-round cost that made the CC stage anti-scale (9.3 s @2
-        # cores → 12.2 s @8 on the 800k corpus before this; the
-        # observation is free, no extra job)
-        parts = max(1, min(
-            spark.sparkContext.defaultParallelism,
-            int(got["n"]) // 50_000 + 1,
-        ))
-
-    if not converged:
+        tasks = size.get["n"] // CC_EDGES_PER_TASK + 1
+    else:
         raise RuntimeError(
             f"connected_components did not converge in {max_iterations} "
-            "large/small-star rounds (pathological graph?); raise "
+            "contraction rounds (pathological graph?); raise "
             "max_iterations"
         )
 
-    # at fixpoint e is a star set: (member, root).  Roots / isolated
+    # e is now a star set (member, root).  Roots and self-loop-only
     # nodes label themselves.
     return nodes.join(
         e.select(F.col("hi").alias("node"), F.col("lo").alias("root")),

@@ -199,10 +199,8 @@ def run_pipeline(
     dup_pairs = stage("dup_pairs", build_dup_pairs)
 
     def build_clusters():
-        edges = dup_pairs.select("a", "b").unionByName(
-            exact_edges.select("a", "b")
-        )
-        labels = connected_components(edges)
+        # dup_pairs already holds the exact edges as method='exact' rows
+        labels = connected_components(dup_pairs.select("a", "b"))
         return assign_clusters(
             docs_normalized.select("doc_id", "status"), labels
         )

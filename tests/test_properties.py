@@ -19,6 +19,7 @@ from face_duplicate_detection_spark.functions.text_hashing import (
     shingle_hashes,
     simhash_batch,
 )
+import face_duplicate_detection_spark.operators.connected_components as cc_mod
 from face_duplicate_detection_spark.operators.connected_components import (
     connected_components,
 )
@@ -127,12 +128,20 @@ edge_lists = st.lists(
 )
 def test_cc_driver_path_matches_distributed(spark, edges):
     """Both branches of the CC size cap label any graph identically:
-    the driver union-find (default cap) and the distributed
-    large/small-star loop (``driver_cap=0``)."""
+    the driver union-find (default cap) and the executor contraction
+    rounds (``driver_cap=0``), the latter both in one task (default
+    per-task bound) and in several (8 edges per task)."""
     df = spark.createDataFrame(edges, "a long, b long")
     driver = {r["doc_id"]: r["cluster_id"]
               for r in connected_components(df).collect()}
-    star = {r["doc_id"]: r["cluster_id"]
-            for r in connected_components(df, driver_cap=0).collect()}
-    assert driver == star
+    one_task = {r["doc_id"]: r["cluster_id"]
+                for r in connected_components(df, driver_cap=0).collect()}
+    saved = cc_mod.CC_EDGES_PER_TASK
+    cc_mod.CC_EDGES_PER_TASK = 8
+    try:
+        multi_task = {r["doc_id"]: r["cluster_id"]
+                      for r in connected_components(df, driver_cap=0).collect()}
+    finally:
+        cc_mod.CC_EDGES_PER_TASK = saved
+    assert driver == one_task == multi_task
     assert set(driver) == {n for e in edges for n in e}
